@@ -11,7 +11,7 @@ side: the J1 join never shuffles the big current-period side.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..model import NODATA_SENTINEL
@@ -142,11 +142,6 @@ def latest_available(catalog: DataFrame) -> DataFrame:
     return catalog.filter(F.col("available")).agg(F.max("date").alias("latest"))
 
 
-def first_feature(df: DataFrame, order_col: str) -> DataFrame:
-    """O3: deterministic limit(1) (reference shp[0], catalog head)."""
-    return df.orderBy(order_col).limit(1)
-
-
 def time_partition_paths(grid: DataFrame, namespace_col: str = "namespace") -> DataFrame:
     """K1 naming convention: {namespace}/{namespace}_{ISO}.000Z.tif
     (ecmwf_opendata/__init__.py:306-314) — the timestamp-in-filename IS the
@@ -156,17 +151,3 @@ def time_partition_paths(grid: DataFrame, namespace_col: str = "namespace") -> D
         "path",
         F.format_string("%s/%s_%s.tif", F.col(namespace_col), F.col(namespace_col), iso),
     )
-
-
-def window_rank_latest(grid: DataFrame) -> DataFrame:
-    """Latest value per cell via row_number over time desc — the engine's
-    'current state of the grid' view. Partitions additionally by
-    ``namespace``/``level`` when the frame carries them (review r11:
-    otherwise one arbitrary namespace's row silently wins per cell), and
-    breaks exact-time ties deterministically on ``value`` so repeated
-    runs return the same 'current state'."""
-    extra = [c for c in ("namespace", "level") if c in grid.columns]
-    w = Window.partitionBy("variable", "y", "x", *extra).orderBy(
-        F.desc("time"), F.asc_nulls_last("value")
-    )
-    return grid.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") == 1).drop("rn")

@@ -9,10 +9,15 @@ Spark-first shape:
   cosine queries) so every distance/centroid computation is exact bigint
   arithmetic — k-means on floats is reduce-order nondeterministic across
   runs/engines, k-means on ints is bit-stable anywhere;
-- each Lloyd iteration is: one broadcast of k centroids, one map-side
-  nearest-centroid assignment (zip_with/aggregate — codegen, no UDF), one
-  (cluster, dim) aggregation; centroids (k×dim ints — index METADATA, not
-  data) come back to the driver exactly like any ML model state;
+- each Lloyd iteration is: one map-side nearest-centroid assignment
+  against the k centroids inlined as literals (zip_with/aggregate —
+  built-ins, no UDF, no exchange), one wide (cluster) aggregation;
+  centroids (k×dim ints — index METADATA, not data) come back to the
+  driver exactly like any ML model state;
+- one routing rule: every nearest-centroid pick — training, frozen-model
+  appends, the grouped fine level — orders candidates by the same
+  `_argmin_key`, so a vector appended under frozen centroids lands where
+  training would have put it;
 - probing: a query searches only its ``nprobe`` nearest clusters — the
   candidate join is an equi-join on cluster id, linear in corpus size.
 
@@ -23,7 +28,7 @@ run-to-run determinism, centroid-update exactness).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from ..checkpoints import ckpt, ckpt_local
 
@@ -31,8 +36,8 @@ from ..checkpoints import ckpt, ckpt_local
 # a single NaN/Infinity component in one upstream embedding would
 # otherwise throw CAST_INVALID_INPUT and kill the whole build/ingest job.
 # A non-finite component quantizes to NULL; NULL poisons that vector's
-# dist²/norm, which ranks it LAST (asc_nulls_last argmin, NULL-guarded
-# cosine below) instead of crashing the pipeline.
+# dist²/norm, which ranks it LAST (the NULL flag leading `_argmin_key`,
+# NULL-guarded cosine below) instead of crashing the pipeline.
 _QUANT = "transform({col}, x -> TRY_CAST(round(CAST(x AS DOUBLE) * 10000.0) AS BIGINT))"
 _DIST2 = "aggregate(zip_with({a}, {b}, (x, y) -> (x - y) * (x - y)), 0L, (acc, v) -> acc + v)"
 _DOT = "aggregate(zip_with(qq, qvec, (x, y) -> x * y), 0L, (acc, v) -> acc + v)"
@@ -61,63 +66,82 @@ def cent_df(spark, cent_rows) -> DataFrame:
     return spark.sql(f"SELECT cluster_id, cvec FROM (VALUES {vals}) AS t(cluster_id, cvec)")
 
 
-def _assign(vectors: DataFrame, centroids: DataFrame, id_col: str) -> DataFrame:
-    """Nearest centroid per vector: broadcast k centroids, map-side dist²,
-    deterministic argmin (ties → smallest cluster id; NULL dist² — a
-    non-finite vector — ranks last, never winning the argmin).
-
-    This is the DataFrame-centroid form (stored centroid tables, frozen
-    models read from parquet). When the centroids are already
-    driver-held rows, `_assign_lit` below produces the identical output
-    with NO join and NO exchange."""
-    d = vectors.crossJoin(F.broadcast(centroids)).withColumn(
-        "dist2", F.expr(_DIST2.format(a="qvec", b="cvec"))
+def _argmin_key(dist2: Column, cid: Column, *payload: Column) -> Column:
+    """The ONE nearest-centroid ordering: struct(dist2 IS NULL, dist2,
+    cid, *payload), compared field by field. A NULL dist² — a non-finite
+    vector, a centroid with a NULL dimension, or a centroid shorter than
+    the vector (zip_with pads with NULL) — ranks after every real
+    distance, and exact ties break to the smallest centroid id. (dist2,
+    cid) is unique per vector, so trailing payload never decides.
+    `_assign_lit` folds these keys with least(), `_assign_df` with min();
+    training and every frozen-model append therefore route a vector to
+    the same centroid. Pass ``dist2`` as an already-projected column: the
+    key reads it twice, and an inlined lambda expression would be
+    evaluated twice."""
+    return F.struct(
+        dist2.isNull().alias("isnul"), dist2.alias("dist2"), cid.alias("cid"), *payload
     )
-    w = Window.partitionBy(id_col).orderBy(F.asc_nulls_last("dist2"), "cluster_id")
-    return (
-        d.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(id_col, "qvec", "cluster_id", "dist2")
+
+
+def _assign_df(vectors: DataFrame, centroids: DataFrame, id_col: str) -> DataFrame:
+    """Nearest centroid per vector against a centroid DATAFRAME (stored
+    centroid tables, frozen models read from parquet, the distributed
+    fine centroids of `kmeans_grouped`), picked by `_argmin_key`.
+
+    - Flat model (cluster_id, cvec): a broadcast crossJoin of the k
+      centroids. Returns (id, qvec, cluster_id, dist2).
+    - Grouped model (group_id, fine_id, cvec): an equi-join on group_id,
+      so each vector meets only its own group's fine centroids and
+      nothing is collected to the driver. Returns (id, group_id, qvec,
+      fine_id, dist2).
+
+    The argmin is a partial-aggregable min() over the key: map-side
+    partial aggregation ships one candidate per vector per task instead
+    of shuffling all n×k joined rows into a window."""
+    if "group_id" in centroids.columns:
+        cid, carry = "fine_id", ["group_id", "qvec"]
+        d = vectors.join(centroids, "group_id")
+    else:
+        cid, carry = "cluster_id", ["qvec"]
+        d = vectors.crossJoin(F.broadcast(centroids))
+    d = d.withColumn("_d2", F.expr(_DIST2.format(a="qvec", b="cvec")))
+    key = _argmin_key(F.col("_d2"), F.col(cid), *map(F.col, carry))
+    best = d.groupBy(id_col).agg(F.min(key).alias("b"))
+    return best.select(
+        id_col,
+        *[F.col(f"b.{c}") for c in carry],
+        F.col("b.cid").alias(cid),
+        F.col("b.dist2"),
     )
 
 
 def _assign_lit(vectors: DataFrame, cent_rows, id_col: str) -> DataFrame:
-    """`_assign` for DRIVER-HELD centroids (optimization r14, guide
-    §2.4 — remove shuffles outright): the k×dim model is inlined as
-    literal arrays, so nearest-centroid is one PROJECTION — k dist²
-    expressions folded by least() over (dist2, cluster_id) structs —
-    with no crossJoin, no window, and no exchange on ``id_col``. Every
-    Lloyd iteration and every model-memo write previously paid a
-    row_number window over n×k joined rows to pick each vector's
-    argmin; the projection computes the same argmin map-side.
-
-    Bit-equivalence with `_assign` (pinned by tests/test_opt_r14.py):
-    same _DIST2 integer arithmetic against the same centroid values;
-    struct ordering (dist2 ASC, cluster_id ASC) replays the window's
-    (asc_nulls_last(dist2), cluster_id) because dist² is NULL only when
-    the VECTOR is null-poisoned — the literal cvecs are complete ints —
-    so per row the k dist² values are all-NULL or all-non-NULL: ties
-    and the all-NULL case both resolve to the smallest cluster_id under
-    either ordering."""
-    if not cent_rows:
-        return _assign(
-            vectors, cent_df(vectors.sparkSession, cent_rows), id_col
+    """`_assign_df` for DRIVER-HELD centroids: the k×dim model is inlined
+    as literal arrays, so nearest-centroid is map-side PROJECTION only —
+    the k dist², then least() over their `_argmin_key` structs — with no
+    join and no exchange on ``id_col``. Every Lloyd iteration of
+    `kmeans_lite` runs through it. Returns (id, qvec, cluster_id, dist2)."""
+    if not cent_rows:  # an empty corpus trains an empty model: no rows
+        return _assign_df(vectors, cent_df(vectors.sparkSession, cent_rows), id_col)
+    d2 = [
+        F.expr(_DIST2.format(a="qvec", b=f"array({','.join(f'{int(v)}L' for v in vec)})"))
+        .alias(f"_d{i}")
+        for i, (_, vec) in enumerate(cent_rows)
+    ]
+    keys = [
+        _argmin_key(F.col(f"_d{i}"), F.lit(int(cid)).cast("int"))
+        for i, (cid, _) in enumerate(cent_rows)
+    ]
+    best = F.least(*keys) if len(keys) > 1 else keys[0]
+    return (
+        vectors.select(id_col, "qvec", *d2)
+        .select(id_col, "qvec", best.alias("_best"))
+        .select(
+            id_col,
+            "qvec",
+            F.col("_best.cid").alias("cluster_id"),
+            F.col("_best.dist2").alias("dist2"),
         )
-    structs = []
-    for cid, vec in cent_rows:
-        arr = f"array({','.join(str(int(v)) + 'L' for v in vec)})"
-        structs.append(
-            f"named_struct('dist2', {_DIST2.format(a='qvec', b=arr)}, "
-            f"'cluster_id', CAST({int(cid)} AS INT))"
-        )
-    best = f"least({', '.join(structs)})" if len(structs) > 1 else structs[0]
-    return vectors.select(
-        F.col(id_col), "qvec", F.expr(best).alias("_best")
-    ).select(
-        id_col,
-        "qvec",
-        F.col("_best.cluster_id").alias("cluster_id"),
-        F.col("_best.dist2").alias("dist2"),
     )
 
 
@@ -174,55 +198,40 @@ def _route_probe_rank(
     )
 
 
-def _update(assigned: DataFrame, dim: int | None = None) -> DataFrame:
-    """New centroid = per-dimension integer mean of the cluster's member
-    vectors. ``sum(v) div count(v)`` stays in BIGINT end-to-end — a DOUBLE
-    division then truncation would lose exactness once a cluster's
-    per-dimension sum exceeds 2^53, breaking the bit-determinism claim
-    (round-2 advice).
+def _max_dim(vectors: DataFrame) -> int:
+    """The longest quantized vector in the training data (0 if empty):
+    the width `_centroid_means` averages over."""
+    return vectors.agg(F.max(F.size("qvec"))).first()[0] or 0
 
-    With ``dim`` known (the training loops learn it from the collected
-    init rows), the per-dimension means run as ``dim`` WIDE aggregates
-    in ONE groupBy(cluster_id) — map-side partial agg, a single exchange
-    of k×dim partial states — instead of posexplode → n×dim rows →
-    (cluster, pos) exchange → second (cluster) exchange (optimization
-    r14, guide §2.3 "aggregate before you shuffle"). Exact equivalence
-    with the explode path, including degenerate corpora
-    (tests/test_opt_r14.py): try_element_at is NULL exactly where the
-    explode emitted nothing (short vector) or a NULL element, and
-    sum/count skip NULLs, so each mean is identical (an all-NULL
-    dimension yields NULL div 0 = NULL, the same NULL the explode path
-    collects); positions are array prefixes, so the explode path's
-    "skip positions no member reaches" is slice(..., max(size(qvec)));
-    a cluster whose members are ALL null-vectors produced no explode
-    rows at all, hence the isNotNull filter on that max."""
-    if dim is not None:
-        aggs = [
-            F.expr(
-                f"sum(try_element_at(qvec, {i + 1})) "
-                f"div count(try_element_at(qvec, {i + 1}))"
-            ).alias(f"_c{i}")
-            for i in range(dim)
-        ]
-        wide = assigned.groupBy("cluster_id").agg(
-            F.expr("max(size(qvec))").alias("_msz"), *aggs
-        )
-        arr = ",".join(f"_c{i}" for i in range(dim))
-        return (
-            wide.filter(F.col("_msz").isNotNull())
-            .select(
-                "cluster_id",
-                F.expr(
-                    f"slice(array({arr}), 1, least(_msz, {dim}))"
-                ).alias("cvec"),
-            )
-        )
-    dims = assigned.select("cluster_id", F.posexplode("qvec").alias("pos", "v"))
-    per_dim = dims.groupBy("cluster_id", "pos").agg(
-        F.expr("sum(v) div count(v)").alias("cv")
-    )
-    return per_dim.groupBy("cluster_id").agg(
-        F.expr("transform(array_sort(collect_list(struct(pos, cv))), s -> s.cv)").alias("cvec")
+
+def _centroid_means(assigned: DataFrame, keys: list[str], dim: int) -> DataFrame:
+    """New centroid per ``keys`` group = per-dimension integer mean of its
+    member vectors. ``sum div count`` stays in BIGINT end-to-end — a
+    DOUBLE division then truncation would lose exactness once a
+    cluster's per-dimension sum exceeds 2^53, breaking the
+    bit-determinism claim (round-2 advice).
+
+    ``dim`` is the longest training vector (``max(size(qvec))`` over the
+    data, never the init rows), so no member dimension is dropped. The
+    means run as ``dim`` WIDE aggregates in ONE groupBy: map-side
+    partial aggregation, a single exchange of groups×dim partial states.
+    try_element_at is NULL past a short member's end and at a NULL
+    element, and sum/count skip NULLs, so each mean covers exactly the
+    members that carry that dimension; the array is cut to the group's
+    own longest member, and a group whose members are all NULL vectors
+    (no size) drops out."""
+    aggs = [
+        F.expr(
+            f"sum(try_element_at(qvec, {i + 1})) div count(try_element_at(qvec, {i + 1}))"
+        ).alias(f"_c{i}")
+        for i in range(dim)
+    ]
+    arr = ",".join(f"_c{i}" for i in range(dim))
+    return (
+        assigned.groupBy(*keys)
+        .agg(F.expr("max(size(qvec))").alias("_msz"), *aggs)
+        .filter(F.col("_msz").isNotNull())
+        .select(*keys, F.expr(f"slice(array({arr}), 1, _msz)").alias("cvec"))
     )
 
 
@@ -239,47 +248,46 @@ def kmeans_lite(
     collected per iteration (k×dim ints) and re-broadcast — bounded model
     state, the same pattern as MLlib's driver-held coefficients."""
     spark = emb.sparkSession
-    # Materialize the quantized vectors ONCE: the init collect, every
-    # Lloyd iteration's _assign, and the final _assign all consume this
-    # subtree, and without truncation each re-executes the scan+quantize
-    # DAG (round-3 verdict). localCheckpoint, not persist: lineage
-    # truncation also keeps the per-iteration plan flat. On a real
-    # cluster use a reliable checkpoint() dir so executor loss can't
+    # Materialize the quantized vectors ONCE: the init collect, the dim
+    # probe, every Lloyd iteration's assignment and the final one all
+    # consume this subtree, and without truncation each re-executes the
+    # scan+quantize DAG (round-3 verdict). localCheckpoint, not persist:
+    # lineage truncation also keeps the per-iteration plan flat. On a
+    # real cluster use a reliable checkpoint() dir so executor loss can't
     # drop blocks mid-iteration.
     #
-    # The cut is shared PER (session, input frame) within this process
-    # (optimization r14): three model variants train on the identical
-    # embeddings frame, and each paid its own quantize+checkpoint job —
-    # same-invocation amortization only (the cache dies with the
-    # session object; nothing persists across runs), keyed by the
-    # frame's semantic hash so a different corpus/projection misses.
+    # The cut and its dim are shared PER (session, input frame) within
+    # this process (optimization r14): three model variants train on the
+    # identical embeddings frame, and each paid its own quantize+checkpoint
+    # job — same-invocation amortization only (the cache dies with the
+    # session object; nothing persists across runs). The key is the
+    # frame's 32-bit semantic hash; a hit is reused only if the cached
+    # input frame is semantically the same plan, so a hash collision
+    # recomputes instead of training on another corpus.
     cache = getattr(spark, "_graft_quant_cache", None)
     if cache is None:
         cache = {}
         spark._graft_quant_cache = cache
     key = (id_col, vec_col, emb.semanticHash())
-    vectors = cache.get(key)
-    if vectors is None:
+    hit = cache.get(key)
+    if hit is not None and hit[0].sameSemantics(emb):
+        _, vectors, dim = hit
+    else:
         vectors = ckpt(quantize(emb, id_col, vec_col))
-        cache[key] = vectors
+        dim = _max_dim(vectors)
+        cache[key] = (emb, vectors, dim)
     init = (
         vectors.orderBy(id_col)
         .limit(k)
         .collect()
     )
     cent_rows = [(i, list(r["qvec"])) for i, r in enumerate(init)]
-    # dim is model state the init collect already holds; it buys the
-    # wide-aggregate _update (one exchange per iteration instead of
-    # explode + two) and the literal-centroid map-side _assign (no
-    # window exchange at all) — optimization r14, same outputs.
-    dim = max((len(v) for _, v in cent_rows if v is not None), default=None)
     for _ in range(iters):
         assigned = _assign_lit(vectors, cent_rows, id_col)
-        cent_rows = [
+        cent_rows = sorted(
             (r["cluster_id"], list(r["cvec"]))
-            for r in _update(assigned, dim=dim).collect()
-        ]
-        cent_rows.sort()
+            for r in _centroid_means(assigned, ["cluster_id"], dim).collect()
+        )
     return _assign_lit(vectors, cent_rows, id_col), cent_rows
 
 
@@ -417,7 +425,7 @@ def append_to_ivf_index(
     probed-list-sized, corpus-size-independent."""
     centroids = spark.table(f"{table}_centroids")
     routed = ckpt_local(  # read twice: cluster set + admission/append
-        _assign(quantize(batch_emb, id_col, vec_col), centroids, id_col).select(
+        _assign_df(quantize(batch_emb, id_col, vec_col), centroids, id_col).select(
             id_col, "qvec", "cluster_id"
         )
     )
@@ -481,56 +489,12 @@ def retire_from_ivf_index(
     writer.saveAsTable(table)
 
 
-def _assign_grouped(vectors: DataFrame, centroids: DataFrame, id_col: str) -> DataFrame:
-    """Nearest FINE centroid within each vector's own coarse group: an
-    equi-join on group_id (per-key candidate set = that group's fine
-    centroids), map-side dist², deterministic argmin. Unlike ``_assign``
-    the centroid table is a DataFrame joined by key — nothing is
-    collected to the driver, so the total centroid count may scale with
-    the corpus.
-
-    The argmin is a partial-aggregable min over
-    struct(dist2 IS NULL, dist2, fine_id, …) — the leading NULL flag
-    replays the old row_number window's asc_nulls_last exactly (a NULL
-    dist² can be per-centroid here when a degenerate fine centroid
-    carries a NULL dimension, so the all-or-none argument of
-    `_assign_lit` does not apply and the flag is load-bearing), and
-    (dist2, fine_id) is unique within a vector's group so trailing
-    payload fields never participate in the ordering. Map-side partial
-    aggregation ships one candidate per vector per task instead of
-    shuffling all n×k joined rows into a window (optimization r14,
-    guide §2.3)."""
-    d = (
-        vectors.join(centroids, "group_id")
-        .withColumn("_d2", F.expr(_DIST2.format(a="qvec", b="cvec")))
-        .select(
-            F.col(id_col),
-            F.struct(
-                F.col("_d2").isNull().alias("isnul"),
-                F.col("_d2").alias("dist2"),
-                F.col("fine_id").alias("fine_id"),
-                F.col("group_id").alias("group_id"),
-                F.col("qvec").alias("qvec"),
-            ).alias("cand"),
-        )
-    )
-    best = d.groupBy(id_col).agg(F.min("cand").alias("b"))
-    return best.select(
-        id_col,
-        F.col("b.group_id").alias("group_id"),
-        F.col("b.qvec").alias("qvec"),
-        F.col("b.fine_id").alias("fine_id"),
-        F.col("b.dist2").alias("dist2"),
-    )
-
-
 def kmeans_grouped(
     vectors: DataFrame,
     k_per_group: int,
     iters: int = 2,
     id_col: str = "vec_id",
-    dim: int | None = None,
-) -> DataFrame:
+) -> tuple[DataFrame, DataFrame]:
     """Data-parallel k-means WITHIN each group of pre-grouped quantized
     vectors (``group_id``, ``qvec`` columns): the second level of the
     hierarchical (IVF-style) clustering used when total k scales with
@@ -540,8 +504,9 @@ def kmeans_grouped(
     the difference between linear and quadratic total work.
 
     Same determinism contract as ``kmeans_lite``: init = each group's
-    ``k_per_group`` smallest ids, exact BIGINT dist² and integer-mean
-    updates, ties → smallest fine_id. Empty fine clusters drop out of
+    ``k_per_group`` smallest ids, the same `_argmin_key` assignment
+    (via the grouped `_assign_df`) and the same `_centroid_means`
+    update, keyed (group_id, fine_id). Empty fine clusters drop out of
     the update (same behavior as kmeans_lite's collected update).
     Returns ((id, group_id, qvec, fine_id, dist2) assignments, the
     final (group_id, fine_id, cvec) centroid DataFrame they were
@@ -556,49 +521,11 @@ def kmeans_grouped(
         )
         .transform(ckpt)
     )
+    dim = _max_dim(vectors)
     for _ in range(iters):
-        assigned = _assign_grouped(vectors, centroids, id_col)
-        if dim is not None:
-            # wide per-dimension means, one exchange (optimization r14 —
-            # same equivalence argument as `_update(dim=...)` above)
-            aggs = [
-                F.expr(
-                    f"sum(try_element_at(qvec, {i + 1})) "
-                    f"div count(try_element_at(qvec, {i + 1}))"
-                ).alias(f"_c{i}")
-                for i in range(dim)
-            ]
-            arr = ",".join(f"_c{i}" for i in range(dim))
-            centroids = (
-                assigned.groupBy("group_id", "fine_id")
-                .agg(F.expr("max(size(qvec))").alias("_msz"), *aggs)
-                .filter(F.col("_msz").isNotNull())
-                .select(
-                    "group_id",
-                    "fine_id",
-                    F.expr(
-                        f"slice(array({arr}), 1, least(_msz, {dim}))"
-                    ).alias("cvec"),
-                )
-                .transform(ckpt)
-            )
-        else:
-            dims = assigned.select(
-                "group_id", "fine_id", F.posexplode("qvec").alias("pos", "v")
-            )
-            per_dim = dims.groupBy("group_id", "fine_id", "pos").agg(
-                F.expr("sum(v) div count(v)").alias("cv")
-            )
-            centroids = (
-                per_dim.groupBy("group_id", "fine_id")
-                .agg(
-                    F.expr(
-                        "transform(array_sort(collect_list(struct(pos, cv))), s -> s.cv)"
-                    ).alias("cvec")
-                )
-                .transform(ckpt)
-            )
-    return _assign_grouped(vectors, centroids, id_col), centroids
+        assigned = _assign_df(vectors, centroids, id_col)
+        centroids = _centroid_means(assigned, ["group_id", "fine_id"], dim).transform(ckpt)
+    return _assign_df(vectors, centroids, id_col), centroids
 
 
 def kmeans_hierarchical(
@@ -642,9 +569,9 @@ def kmeans_hierarchical_model(
     """`kmeans_hierarchical` exposing the trained MODEL alongside the
     assignments: (assign_df, coarse centroid rows, fine centroids
     DataFrame). The memo tier (plans/ann_memo.py) persists all three so
-    a corpus APPEND can route new rows through the frozen model —
-    coarse `_assign` then grouped `_assign_grouped` — instead of
-    retraining (round-13; the same contract as `append_to_ivf_index`)."""
+    a corpus APPEND can route new rows through the frozen model — flat
+    then grouped `_assign_df` — instead of retraining (round-13; the
+    same contract as `append_to_ivf_index`)."""
     k1, k2 = hier_split(k)
     coarse, coarse_cents = kmeans_lite(
         emb, k=k1, iters=iters, id_col=id_col, vec_col=vec_col
@@ -652,9 +579,8 @@ def kmeans_hierarchical_model(
     grouped = ckpt(coarse.select(
         id_col, F.col("cluster_id").alias("group_id"), "qvec"
     ))
-    dim = max((len(v) for _, v in coarse_cents if v is not None), default=None)
     fine, fine_cents = kmeans_grouped(
-        grouped, k_per_group=k2, iters=iters, id_col=id_col, dim=dim
+        grouped, k_per_group=k2, iters=iters, id_col=id_col
     )
     assign = fine.select(
         id_col,
@@ -671,17 +597,17 @@ def assign_hierarchical_frozen(
     k: int,
     id_col: str = "vec_id",
 ) -> DataFrame:
-    """Assign (id, qvec) rows under a FROZEN two-level model: broadcast
-    coarse `_assign` routes each vector to its group, grouped
-    `_assign_grouped` picks the fine cluster within that group, and the
+    """Assign (id, qvec) rows under a FROZEN two-level model: the flat
+    `_assign_df` routes each vector to its coarse group, the grouped
+    `_assign_df` picks the fine cluster within that group, and the
     composite id uses the model's own k2 — bit-compatible with
     `kmeans_hierarchical_model`'s final assignment pass over the same
     rows."""
     _, k2 = hier_split(k)
-    routed = _assign(vectors, coarse_cents, id_col).select(
+    routed = _assign_df(vectors, coarse_cents, id_col).select(
         id_col, "qvec", F.col("cluster_id").alias("group_id")
     )
-    fine = _assign_grouped(routed, fine_cents, id_col)
+    fine = _assign_df(routed, fine_cents, id_col)
     return fine.select(
         id_col,
         "qvec",

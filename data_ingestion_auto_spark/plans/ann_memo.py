@@ -97,12 +97,13 @@ def kml_model(spark, sf_dir, variant: str, emb_builder, k: int, iters: int = 2):
     Append path (round-13): if the corpus is an APPEND of a prior
     version with published model memos, the centroids are FROZEN (copied
     from the prior memo) and only the new rows — those absent from the
-    prior assignment table — are assigned via broadcast `_assign`. Old
+    prior assignment table — are assigned via `_assign_df` (broadcast
+    centroids, the same argmin key training used). Old
     rows keep their exact prior assignments; a full retrain happens only
     on in-place regeneration or an algorithm/version change (SCALE.md
     round-13). Same contract as `append_to_ivf_index`
-    (operators/ivf.py:277)."""
-    from ..operators.ivf import _assign, cent_df, kmeans_lite, quantize
+    (operators/ivf.py)."""
+    from ..operators.ivf import _assign_df, cent_df, kmeans_lite, quantize
 
     shared = {}
     tag = f"{variant}_k{k}i{iters}"
@@ -126,7 +127,7 @@ def kml_model(spark, sf_dir, variant: str, emb_builder, k: int, iters: int = 2):
             fresh = quantize(emb_builder())
             new = fresh.join(old.select("vec_id"), "vec_id", "left_anti")
             return old.unionByName(
-                _assign(new, cents, "vec_id").select("vec_id", "qvec", "cluster_id")
+                _assign_df(new, cents, "vec_id").select("vec_id", "qvec", "cluster_id")
             )
         return _train()["a"].select("vec_id", "qvec", "cluster_id")
 
@@ -151,10 +152,10 @@ def kmg_model(spark, sf_dir, variant: str, sub_builder, k_per_group: int, iters:
 
     Append path (round-13): on a corpus append the per-group fine
     centroids stay FROZEN and only sub-frame rows absent from the prior
-    code table are assigned via `_assign_grouped` (for the residual
+    code table are assigned via the grouped `_assign_df` (for the residual
     variants the sub frame derives from the kml model, itself frozen on
     append, so old rows' groupings are unchanged)."""
-    from ..operators.ivf import _assign_grouped, kmeans_grouped
+    from ..operators.ivf import _assign_df, kmeans_grouped
 
     shared = {}
 
@@ -180,7 +181,7 @@ def kmg_model(spark, sf_dir, variant: str, sub_builder, k_per_group: int, iters:
             cents = spark.read.parquet(pr[1])
             new = sub_builder().join(old.select("rid"), "rid", "left_anti")
             return old.unionByName(
-                _assign_grouped(new, cents, "rid").select("rid", "group_id", "fine_id")
+                _assign_df(new, cents, "rid").select("rid", "group_id", "fine_id")
             )
         return _train()["a"].select("rid", "group_id", "fine_id")
 

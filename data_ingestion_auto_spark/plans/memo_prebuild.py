@@ -24,8 +24,18 @@ publish race falls back to reading the winner's files.
 
 from __future__ import annotations
 
+import logging
 import time
 from concurrent.futures import ThreadPoolExecutor
+from concurrent.futures import wait as _wait
+
+log = logging.getLogger(__name__)
+
+# Past the deadline, chains still running are re-cancelled by job group
+# once per sweep; after this many sweeps prebuild gives up on them, logs
+# them as wedged and returns without waiting.
+_DRAIN_SWEEPS = 3
+_SWEEP_SEC = 5.0
 
 
 def prebuild_chains(spark, sf_dir: str):
@@ -92,7 +102,13 @@ def prebuild(
     cancelled and their memos fall back to lazy first-touch builds
     (inside the per-query watchdog) instead of failing the run — a
     timeout is a host condition, not a build failure, so only REAL
-    build errors still raise."""
+    build errors still raise. Chains that never started are dropped at
+    the deadline; a chain that outlives ``_DRAIN_SWEEPS`` re-cancel
+    sweeps (e.g. one blocked in Python, which a job-group cancel cannot
+    interrupt) is logged as wedged and left running — the pool shuts
+    down without waiting, so the return is bounded by the deadline plus
+    the sweeps. Cancelled chains are logged and absent from the
+    returned walls."""
     import os
 
     if timeout_sec is None:
@@ -122,33 +138,42 @@ def prebuild(
             sc.setLocalProperty("spark.job.interruptOnCancel", None)
         walls[name] = round(time.perf_counter() - t0, 3)
 
-    from concurrent.futures import wait as _wait
-
     deadline = time.monotonic() + timeout_sec
-    with ThreadPoolExecutor(max_workers=max_workers) as pool:
-        futs = {pool.submit(run, n, ts): n for n, ts in chains}
+    pool = ThreadPoolExecutor(max_workers=max_workers)
+    futs = {pool.submit(run, n, ts): n for n, ts in chains}
+    try:
         not_done = set(futs)
         while not_done and time.monotonic() < deadline:
-            done, not_done = _wait(
-                not_done, timeout=min(5.0, max(0.1, deadline - time.monotonic()))
+            _, not_done = _wait(
+                not_done,
+                timeout=min(_SWEEP_SEC, max(0.1, deadline - time.monotonic())),
             )
-        if not_done:
+        # deadline passed: chains that never started are dropped; running
+        # ones are cancelled by job group, re-cancelled each sweep because
+        # an iterative build keeps submitting jobs (same pattern as
+        # bench.py's watchdog) — but only for a bounded number of sweeps
+        for f in not_done:
+            cancelled.add(futs[f])
+            f.cancel()
+        not_done = {f for f in not_done if not f.cancelled()}
+        for _ in range(_DRAIN_SWEEPS):
+            if not not_done:
+                break
             for f in not_done:
-                cancelled.add(futs[f])
-            # cancel the wedged groups until their threads give up; an
-            # iterative build keeps submitting jobs, so re-cancel in the
-            # drain loop below (same pattern as bench.py's watchdog)
-            while not_done:
-                for f in not_done:
-                    try:
-                        spark.sparkContext.cancelJobGroup(
-                            f"memo-prebuild:{futs[f]}"
-                        )
-                    except Exception:  # noqa: BLE001
-                        pass
-                done, not_done = _wait(not_done, timeout=5.0)
+                try:
+                    spark.sparkContext.cancelJobGroup(f"memo-prebuild:{futs[f]}")
+                except Exception:  # noqa: BLE001
+                    pass
+            _, not_done = _wait(not_done, timeout=_SWEEP_SEC)
+        if cancelled:
+            log.warning("memo prebuild: deadline of %.0f s passed, cancelled chains: %s",
+                        timeout_sec, sorted(cancelled))
+        if not_done:
+            log.warning("memo prebuild: chains still running after %d cancel sweeps, "
+                        "left behind: %s", _DRAIN_SWEEPS, sorted(futs[f] for f in not_done))
+    finally:
+        pool.shutdown(wait=False, cancel_futures=True)
     for f, name in futs.items():
-        e = f.exception()
-        if e is not None and name not in cancelled:
+        if name not in cancelled and (e := f.exception()) is not None:
             raise e
     return walls

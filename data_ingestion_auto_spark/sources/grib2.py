@@ -89,11 +89,6 @@ def _rs16(b: bytes) -> int:
     return -(u & 0x7FFF) if u & 0x8000 else u
 
 
-def _rs32(b: bytes) -> int:
-    (u,) = struct.unpack(">I", b)
-    return -(u & 0x7FFFFFFF) if u & 0x80000000 else u
-
-
 def _pack_bits(xs: list[int], nbits: int) -> bytes:
     """MSB-first bit packing, zero-padded to a byte boundary (spec
     section 7 simple packing)."""

@@ -89,3 +89,149 @@ def test_hierarchical_kmeans_partitions_and_fine_argmin(spark, sf_dir):
         assert (best[1], best[0]) == (r.fine_id, r.dist2), r.vec_id
         n_checked += 1
     assert n_checked == emb.count()
+
+
+def _window_argmin(spark, vectors, cent_rows):
+    """Reference argmin, written independently of the engine: crossJoin
+    every centroid, rank by (dist² ASC NULLS LAST, cluster_id) in a
+    row_number window, keep rank 1."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    from data_ingestion_auto_spark.operators.ivf import _DIST2, cent_df
+
+    d = vectors.crossJoin(cent_df(spark, cent_rows)).withColumn(
+        "dist2", F.expr(_DIST2.format(a="qvec", b="cvec"))
+    )
+    w = Window.partitionBy("vec_id").orderBy(F.asc_nulls_last("dist2"), "cluster_id")
+    return sorted(
+        tuple(r)
+        for r in d.withColumn("rn", F.row_number().over(w))
+        .filter("rn = 1")
+        .select("vec_id", "qvec", "cluster_id", "dist2")
+        .collect()
+    )
+
+
+def test_assign_lit_and_df_match_window_argmin(spark):
+    """Both nearest-centroid paths — literal centroids (`_assign_lit`,
+    training) and a centroid DataFrame (`_assign_df`, frozen-model
+    appends) — must equal a row_number window argmin: exact distance
+    ties break to the smallest cluster id, a NULL-poisoned vector (all
+    dist² NULL) takes the smallest cluster id, and a centroid SHORTER
+    than the vector (dist² NULL, zip_with pads with NULL) never beats a
+    real distance."""
+    from data_ingestion_auto_spark.operators.ivf import (
+        _assign_df,
+        _assign_lit,
+        cent_df,
+        quantize,
+    )
+
+    rows = [
+        (1, [1.0, 2.0, 3.0]),
+        (2, [float("nan"), 1.0, 1.0]),  # quantizes to [NULL, 10000, 10000]
+        (3, [0.0, 0.0, 0.0]),
+        (4, [1.0, 2.0, 3.0]),
+        (5, [100.0, -50.0, 7.25]),
+    ]
+    v = quantize(spark.createDataFrame(rows, "vec_id long, embedding array<double>"))
+    models = [
+        # centroid 0 and the duplicate of vector 1/4 tie exactly for those
+        # vectors; centroid 1 is the zero vector; 2 matches vector 5 exactly
+        [(0, [10000, 20000, 30000]), (1, [0, 0, 0]), (2, [1000000, -500000, 72500])],
+        # centroid 1 is shorter than every vector: its dist² is NULL
+        [(0, [10000, 20000, 30000]), (1, [10000, 20000])],
+    ]
+    for cent_rows in models:
+        ref = _window_argmin(spark, v, cent_rows)
+        lit = sorted(tuple(r) for r in _assign_lit(v, cent_rows, "vec_id").collect())
+        df = sorted(
+            tuple(r) for r in _assign_df(v, cent_df(spark, cent_rows), "vec_id").collect()
+        )
+        assert lit == ref
+        assert df == ref
+    # the short-centroid model: vector 1 sits exactly on centroid 0
+    assert lit[0][2:] == (0, 0)
+
+
+def test_centroid_means_match_explode_mean(spark):
+    """The wide-aggregate centroid update must equal a posexplode
+    per-dimension integer mean: NULL elements (a NULL-poisoned member)
+    are excluded from sum and count, an empty cluster drops out, and a
+    member LONGER than every init row keeps all its dimensions (dim
+    comes from the data, not from the k init rows)."""
+    from pyspark.sql import functions as F
+
+    from data_ingestion_auto_spark.operators.ivf import (
+        _assign_lit,
+        _centroid_means,
+        _max_dim,
+        quantize,
+    )
+
+    def explode_means(assigned):
+        per_dim = (
+            assigned.select("cluster_id", F.posexplode("qvec").alias("pos", "v"))
+            .groupBy("cluster_id", "pos")
+            .agg(F.expr("sum(v) div count(v)").alias("cv"))
+        )
+        return sorted(
+            (r["cluster_id"], tuple(r["cvec"]))
+            for r in per_dim.groupBy("cluster_id")
+            .agg(
+                F.expr(
+                    "transform(array_sort(collect_list(struct(pos, cv))), s -> s.cv)"
+                ).alias("cvec")
+            )
+            .collect()
+        )
+
+    def frame(rows):
+        return spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+
+    cases = [
+        # vectors 1+2 share cluster 0; the NULL-poisoned vector 3 (all
+        # dist² NULL) also lands on the smallest id; nothing joins cluster 1
+        ([(1, [1.0, 2.0]), (2, [3.0, 5.0]), (3, [float("nan")] * 2)],
+         [(0, [20000, 35000]), (1, [99990000, 99990000])]),
+        # one cluster holding [1,2] and [1,2,3,4]
+        ([(1, [1.0, 2.0]), (2, [1.0, 2.0, 3.0, 4.0])], [(0, [10000, 20000])]),
+    ]
+    got = []
+    for rows, cent_rows in cases:
+        v = quantize(frame(rows))
+        assigned = _assign_lit(v, cent_rows, "vec_id")
+        got.append(sorted(
+            (r["cluster_id"], tuple(r["cvec"]))
+            for r in _centroid_means(assigned, ["cluster_id"], _max_dim(v)).collect()
+        ))
+        assert got[-1] == explode_means(assigned)
+    # integer means: (10000+30000) div 2, (20000+50000) div 2; all 4 dims
+    assert got == [[(0, (20000, 35000))], [(0, (10000, 20000, 30000, 40000))]]
+    # end to end: the k=1 init row is 2-long, the centroid keeps 4 dims
+    _, cents = kmeans_lite(frame(cases[1][0]), k=1, iters=1)
+    assert cents == [(0, [10000, 20000, 30000, 40000])]
+
+
+def test_quant_cache_hit_requires_same_semantics(spark):
+    """The per-session quantize cache is keyed on a 32-bit semantic hash;
+    a different frame planted under the same key must be recomputed, not
+    reused, while a genuine hit is reused."""
+    from data_ingestion_auto_spark.operators.ivf import quantize
+
+    schema = "vec_id long, embedding array<double>"
+    emb = spark.createDataFrame([(1, [1.0, 2.0]), (2, [3.0, 4.0])], schema)
+    other = spark.createDataFrame([(7, [9.0, 9.0])], schema)
+    if getattr(spark, "_graft_quant_cache", None) is None:
+        spark._graft_quant_cache = {}
+    key = ("vec_id", "embedding", emb.semanticHash())
+    spark._graft_quant_cache[key] = (other, quantize(other), 2)
+
+    assigned, _ = kmeans_lite(emb, k=2, iters=1)
+    assert sorted(r["vec_id"] for r in assigned.collect()) == [1, 2]
+    entry = spark._graft_quant_cache[key]
+    assert entry[0] is emb
+
+    kmeans_lite(emb, k=2, iters=1)
+    assert spark._graft_quant_cache[key] is entry

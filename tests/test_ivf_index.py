@@ -155,7 +155,7 @@ def test_append_routes_with_frozen_centroids_and_is_idempotent(
     centroids = spark.table("t_ivf_idx_a_centroids")
     routed = {
         r.vec_id: r.cluster_id
-        for r in V._assign(V.quantize(batch), centroids, "vec_id").collect()
+        for r in V._assign_df(V.quantize(batch), centroids, "vec_id").collect()
     }
     stored = {
         r.vec_id: r.cluster_id

@@ -2,7 +2,7 @@
 #4): appending files to the embeddings corpus changes every
 `_corpus_memo` fingerprint, but must NOT retrain the k-means/PQ models —
 the quantizer freezes at its trained version (the `append_to_ivf_index`
-contract, operators/ivf.py:277) and only the new rows are assigned.
+contract in operators/ivf.py) and only the new rows are assigned.
 A full retrain is forced exactly when the corpus is regenerated in place
 (old file stats change) or the algorithm/version changes — see SCALE.md
 round-13.

@@ -9,58 +9,6 @@ import os
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def test_assign_lit_matches_assign(spark):
-    """The literal-centroid map-side argmin must reproduce the
-    crossJoin+window `_assign` bit-for-bit, including the NULL-poisoned
-    vector (all dist² NULL -> smallest cluster id under both orderings)
-    and exact distance ties (same (dist2, cluster_id) tie-break)."""
-    from data_ingestion_auto_spark.operators.ivf import (
-        _assign,
-        _assign_lit,
-        cent_df,
-        quantize,
-    )
-
-    rows = [
-        (1, [1.0, 2.0, 3.0]),
-        (2, [float("nan"), 1.0, 1.0]),  # quantizes to [NULL, 10000, 10000]
-        (3, [0.0, 0.0, 0.0]),
-        (4, [1.0, 2.0, 3.0]),
-        (5, [100.0, -50.0, 7.25]),
-    ]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    v = quantize(emb)
-    # centroid 0 and the duplicate of vector 1/4 tie exactly for those
-    # vectors; centroid 1 is the zero vector; 2 matches vector 5 exactly
-    cent_rows = [(0, [10000, 20000, 30000]), (1, [0, 0, 0]), (2, [1000000, -500000, 72500])]
-    a_old = sorted(tuple(r) for r in _assign(v, cent_df(spark, cent_rows), "vec_id").collect())
-    a_new = sorted(tuple(r) for r in _assign_lit(v, cent_rows, "vec_id").collect())
-    assert a_old == a_new
-
-
-def test_update_wide_matches_explode(spark):
-    """The wide per-dimension `_update(dim=...)` must match the explode
-    path, including an all-NULL-vector cluster (which the explode path
-    drops entirely) and NULL elements (excluded from sum and count)."""
-    from data_ingestion_auto_spark.operators.ivf import _assign_lit, _update, quantize
-
-    rows = [(1, [1.0, 2.0]), (2, [3.0, 5.0]), (3, [float("nan")] * 2)]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    v = quantize(emb)
-    # cluster 1 is far away: only the NULL-poisoned vector lands there
-    # (all-NULL dist² -> cluster 0 actually; craft instead two clusters
-    # where vectors 1+2 share cluster 0 and nothing real joins cluster 1)
-    cent_rows = [(0, [20000, 35000]), (1, [99990000, 99990000])]
-    assigned = _assign_lit(v, cent_rows, "vec_id")
-    u_old = sorted((r["cluster_id"], tuple(r["cvec"])) for r in _update(assigned).collect())
-    u_new = sorted(
-        (r["cluster_id"], tuple(r["cvec"])) for r in _update(assigned, dim=2).collect()
-    )
-    assert u_old == u_new
-    # integer-mean check: (10000+30000) div 2, (20000+50000) div 2
-    assert u_new == [(0, (20000, 35000))]
-
-
 def test_cc_frontier_shapes_identical(spark):
     """Frontier-filtered connected components must return the identical
     label table at every (hops, jumps) round shape — semi-naive
@@ -148,12 +96,11 @@ def test_assign_grouped_matches_window_argmin(spark):
     fine_id, ...) must replay the old row_number window's
     (asc_nulls_last(dist2), fine_id) order — including a MIXED-null
     group (one fine centroid with a NULL dimension poisons only its own
-    dist², so the leading null flag is load-bearing, unlike
-    _assign_lit's all-or-none case)."""
+    dist², so the leading null flag is load-bearing)."""
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    from data_ingestion_auto_spark.operators.ivf import _DIST2, _assign_grouped
+    from data_ingestion_auto_spark.operators.ivf import _DIST2, _assign_df
 
     vectors = spark.createDataFrame(
         [(1, 0, [1, 2]), (2, 0, [9, 9]), (3, 1, [5, 5])],
@@ -167,7 +114,7 @@ def test_assign_grouped_matches_window_argmin(spark):
         [(0, 0, [None, 2]), (0, 1, [1, 2]), (1, 0, [5, 6]), (1, 1, [5, 4])],
         "group_id int, fine_id int, cvec array<bigint>",
     )
-    got = sorted(tuple(r) for r in _assign_grouped(vectors, centroids, "vec_id").collect())
+    got = sorted(tuple(r) for r in _assign_df(vectors, centroids, "vec_id").collect())
     d = vectors.join(centroids, "group_id").withColumn(
         "dist2", F.expr(_DIST2.format(a="qvec", b="cvec"))
     )
