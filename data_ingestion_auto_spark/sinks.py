@@ -33,11 +33,11 @@ def write_partitioned(df: DataFrame, path: str, partition_cols: list[str]) -> No
 
 def overwrite_partitions(df: DataFrame, path: str, partition_cols: list[str]) -> None:
     """K2/W9: idempotent per-partition overwrite (delete-then-insert of
-    exactly the partitions present in `df`). Requires
-    spark.sql.sources.partitionOverwriteMode=dynamic (set by the session
-    factory and re-asserted here on the df's own session)."""
-    df.sparkSession.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    df.write.mode("overwrite").partitionBy(*partition_cols).parquet(path)
+    exactly the partitions present in `df`). Dynamic mode is a per-write
+    option, so the session conf is neither needed nor changed: concurrent
+    jobs share one session, and a caller's STATIC mode stays STATIC."""
+    (df.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+     .partitionBy(*partition_cols).parquet(path))
 
 
 _PART_RE = re.compile(r"^(?P<col>[^=]+)=(?P<val>.*)$")

@@ -8,6 +8,7 @@ retention, and a streaming foreachBatch run equal to the batch control."""
 from __future__ import annotations
 
 import os
+import threading
 import time
 
 import duckdb
@@ -27,7 +28,7 @@ def _batch(spark, day: str, n: int, level: float):
     ).selectExpr("CAST(date AS TIMESTAMP) AS date", "geom", "alert_level")
 
 
-def _table(db_path):
+def _table(db_path, table="alerts"):
     con = duckdb.connect(db_path)
     try:
         return sorted(
@@ -35,7 +36,7 @@ def _table(db_path):
                 tuple,
                 con.execute(
                     "SELECT CAST(date AS VARCHAR), geom, alert_level "
-                    "FROM ingest.alerts"
+                    f"FROM ingest.{table}"
                 ).fetchall(),
             )
         )
@@ -138,6 +139,69 @@ def test_row_level_retention(spark, tmp_path):
     rows = _table(db)
     assert len(rows) == 4
     assert all(not r[0].startswith("2026-01-01") for r in rows)
+
+
+def _publish_in_threads(jobs, timeout=120):
+    """Run each (batch_df, db, table, staging_root) publish in its own
+    thread, all started together; re-raise the first failure."""
+    errors = []
+    start = threading.Barrier(len(jobs), timeout=timeout)
+
+    def run(args):
+        try:
+            start.wait()
+            S.publish_batch(*args)
+        except Exception as e:  # noqa: BLE001 — re-raised in the test thread
+            errors.append(e)
+
+    threads = [threading.Thread(target=run, args=(a,)) for a in jobs]
+    for th in threads:
+        th.start()
+    for th in threads:
+        th.join(timeout=timeout)
+    assert not any(th.is_alive() for th in threads)
+    if errors:
+        raise errors[0]
+
+
+def test_concurrent_publishes_to_two_tables_of_one_file(spark, tmp_path):
+    """Two jobs publishing into one DuckDB file at once (cams and chirps
+    in one tick): each table gets every staged row exactly once."""
+    db = str(tmp_path / "two.duckdb")
+    for t in ("alerts", "other"):
+        S.bootstrap_ddl(db, t, ["alert_level"])
+    root = str(tmp_path / "st")
+    for rnd in range(3):
+        _publish_in_threads([
+            (_batch(spark, f"2026-03-0{rnd + 1}", 40, 1.0), db, "alerts", root),
+            (_batch(spark, f"2026-03-0{rnd + 1}", 30, 2.0), db, "other", root),
+        ])
+    for t, n, level in (("alerts", 40, 1.0), ("other", 30, 2.0)):
+        want = sorted(
+            (f"2026-03-0{d} 00:00:00", f"POINT({i} {i})", level + i)
+            for d in (1, 2, 3) for i in range(n)
+        )
+        assert _table(db, t) == want
+
+
+def test_concurrent_publishes_of_different_dates_to_one_table(spark, tmp_path):
+    """Two threads publishing different dates into one table at once:
+    neither delete-then-insert transaction touches the other's rows, and
+    every staged row lands exactly once."""
+    db = str(tmp_path / "one.duckdb")
+    S.bootstrap_ddl(db, "alerts", ["alert_level"])
+    root = str(tmp_path / "st")
+    for rnd in range(3):
+        _publish_in_threads([
+            (_batch(spark, "2026-04-01", 40 + rnd, 1.0), db, "alerts", root),
+            (_batch(spark, "2026-04-02", 30 + rnd, 5.0), db, "alerts", root),
+        ])
+    want = sorted(
+        [("2026-04-01 00:00:00", f"POINT({i} {i})", 1.0 + i) for i in range(42)]
+        + [("2026-04-02 00:00:00", f"POINT({i} {i})", 5.0 + i) for i in range(32)]
+    )
+    assert _table(db) == want
+    assert os.listdir(root) == []
 
 
 def test_streaming_foreach_batch_equals_batch_control(spark, tmp_path):

@@ -41,6 +41,26 @@ def test_overwrite_only_touched_partitions(spark, tmp_path):
     assert spark.read.parquet(out).filter(F.col("day") == "2024-01-02").count() == 2
 
 
+def test_overwrite_is_dynamic_on_a_static_session(spark, tmp_path):
+    """Dynamic overwrite is a per-write option: on a session set to
+    STATIC only the batch's partitions are replaced, and the session
+    conf still reads STATIC afterwards (concurrent jobs share one
+    session, so a sink must not flip it)."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "STATIC")
+    try:
+        out = str(tmp_path / "t")
+        overwrite_partitions(_batch(spark, "2024-01-01", [1, 2, 3]), out, ["day"])
+        overwrite_partitions(_batch(spark, "2024-01-02", [9]), out, ["day"])
+        overwrite_partitions(_batch(spark, "2024-01-02", [7, 8]), out, ["day"])
+        assert spark.conf.get(key) == "STATIC"
+    finally:
+        spark.conf.set(key, before)
+    counts = {str(r.day): r["count"] for r in spark.read.parquet(out).groupBy("day").count().collect()}
+    assert counts == {"2024-01-01": 3, "2024-01-02": 2}
+
+
 def test_retention_hive_escaped_timestamps(spark, tmp_path):
     """Colons in partition values are Hive-escaped (`%3A`) on disk; the
     watermark compare must use the decoded value — raw `%3A` sorts below

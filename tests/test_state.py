@@ -4,6 +4,8 @@ from __future__ import annotations
 
 import json
 import os
+import sys
+import threading
 
 from data_ingestion_auto_spark.state import StateStore
 
@@ -68,3 +70,35 @@ def test_delete(tmp_path):
     assert s.get("a", "k2") == "v2"
     s.delete("a")
     assert s.get_all("a") == {}
+
+
+def test_concurrent_commits_lose_nothing(tmp_path):
+    """Commits from many threads serialize: 8 threads x 25 commits, each
+    thread to its own dataset, rewriting five keys and adding one new key
+    per commit. Every key survives with its last value and the file stays
+    valid JSON; an unlocked read-modify-write would drop updates."""
+    path = str(tmp_path / "state.json")
+    store = StateStore(path)
+    n_threads, n_commits = 8, 25
+
+    def worker(t):
+        for i in range(n_commits):
+            store.commit(f"ds{t}", {f"k{i % 5}": f"{t}-{i}", f"n{i}": str(i)})
+
+    threads = [threading.Thread(target=worker, args=(t,)) for t in range(n_threads)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=60)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(th.is_alive() for th in threads)
+    with open(path) as f:
+        data = json.load(f)
+    for t in range(n_threads):
+        want = {f"k{i % 5}": f"{t}-{i}" for i in range(n_commits)}
+        want.update({f"n{i}": str(i) for i in range(n_commits)})
+        assert data[f"ds{t}"] == want
